@@ -1,8 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query and total seconds over
   * SparkEntry.queries at SPARK_GRAFT_SF_DIR (driver contract).
@@ -15,86 +12,37 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object Bench {
 
-  /** Per-job-group task-metric totals. Attribution rides the job group id
-    * (set around each query's reps), so asynchronously-delivered events
-    * from a previous query can never pollute the next one's counters —
-    * each event carries its own group. AQE's runtime-spawned jobs inherit
-    * the group from the submitting thread, so re-planned stages count too.
+  /** The `SPARK_GRAFT_QUERIES` subset (comma-separated names) of
+    * [[SparkEntry.queries]] for targeted runs; unset → the full surface.
+    * Unknown names fail FAST (exit 2) — a typo silently matching nothing
+    * would emit a plausible-looking empty result that could be recorded as
+    * a real datapoint.
     */
-  private final class BytesListener extends SparkListener {
-    final class Counters { val shuffle = new AtomicLong; val spill = new AtomicLong }
-    private val byGroup = new ConcurrentHashMap[String, Counters]()
-    private val stageToGroup = new ConcurrentHashMap[Int, String]()
-
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      g.foreach(grp => js.stageIds.foreach(sid => stageToGroup.put(sid, grp)))
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val grp = stageToGroup.get(te.stageId)
-      if (grp != null && te.taskMetrics != null) {
-        val c = byGroup.computeIfAbsent(grp, _ => new Counters)
-        c.shuffle.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        c.spill.addAndGet(te.taskMetrics.diskBytesSpilled)
-      }
-      events.incrementAndGet()
-    }
-    private val events = new AtomicLong
-
-    def totals(group: String): (Long, Long) = {
-      val c = byGroup.get(group)
-      if (c == null) (0L, 0L) else (c.shuffle.get, c.spill.get)
-    }
-    /** Listener delivery is async; poll ONCE, globally, until the event
-      * count is stable across two reads (bounded) instead of reaching into
-      * the private listener-bus drain API — after which every group's
-      * totals are final.
-      */
-    def settle(maxMs: Long = 3000): Unit = {
-      var prev = events.get
-      var waited = 0L
-      while (waited < maxMs) {
-        Thread.sleep(100); waited += 100
-        val cur = events.get
-        if (cur == prev) return
-        prev = cur
-      }
+  private[graft] def selectedQueries(
+      spark: SparkSession,
+      tool: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = SparkEntry.queries
+    sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case scala.None => all
+      case Some(names) =>
+        val unknown = names -- all.keySet
+        if (unknown.nonEmpty) {
+          System.err.println(
+            s"[$tool] unknown query name(s) in SPARK_GRAFT_QUERIES: ${unknown.mkString(", ")}")
+          // stop the session first: exiting with a live SparkSession leaves
+          // the Derby metastore lock to die with the JVM instead of a clean
+          // shutdown
+          spark.stop()
+          sys.exit(2)
+        }
+        all.filter { case (n, _) => names(n) }
     }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Split-size the single-file driver fixtures to the core count: the
-      // defaults (128 MB partitions, 4 MB open cost) hand a one-file
-      // 10 MB-compressed events table to 3 of 32 cores — measured 46×
-      // instead of ~10× on the JSON-parse-bound q_label_missing at ×10.
-      // This is the documented sizing knob (partitions track data ÷
-      // executors); a real cluster sizes it to ITS core count the same way.
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      // ObjectHashAggregate (TypedImperativeAggregate: graft_topk_edges,
-      // graft_topk, KMV/CMS sketches) falls back to SORT-based aggregation
-      // after 128 distinct keys per partition BY DEFAULT — at x100 the
-      // kNN top-k agg sorted its whole 57M-row candidate stream (7.4 GB
-      // spill, 3.4x the stage wall). The states are O(k) each, so a
-      // 1M-key hash map is a few MB: keep the agg hash-based.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-      // Memo/intermediate localCheckpoint blocks are ADVISORY caches: the
-      // unified-memory default protects HALF the heap for storage, and the
-      // r14 whole-surface x100 run measured later queries' sorts spilling
-      // 1-12 GB while early families' (or their OWN upstream's) blocks sat
-      // in the protected region. 0.2 lets execution evict cached blocks
-      // (MEMORY_AND_DISK - they re-read from disk, once) instead of
-      // spilling sort runs; plans and results are unaffected.
-      .config("spark.memory.storageFraction", "0.2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm the JVM + parquet footers once so per-query timings measure the
     // queries, not first-touch JIT/IO. Best-effort: a missing table must
     // not abort the bench (per-query failures degrade individually below).
@@ -112,12 +60,10 @@ object Bench {
     // release schedule below frees a family's checkpoint blocks after its
     // last timed consumer — measured: un-evicted early-family blocks
     // displaced later sorts out of protected storage at ×100).
-    // (declared early: the warm pass below warms exactly the selected
-    // subset — warming all 364 queries added ~8 min to every targeted
-    // probe; the driver leaves the subset unset, so its full runs warm the
-    // full surface exactly as before)
-    val subsetEnv = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // The warm pass warms exactly the selected subset — warming all 364
+    // queries added ~8 min to every targeted probe; the driver leaves the
+    // subset unset, so its full runs warm the full surface.
+    val selected = selectedQueries(spark, "bench")
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       // SAME sorted order as the timed loop: the release schedule below is
@@ -125,12 +71,13 @@ object Bench {
       // family's cache miss would otherwise be attributed to a different
       // "first builder" under Map iteration order — releasing it before a
       // later timed builder needs it, silently rebuilding inside a timed rep
-      SparkEntry.queries.toSeq
-        .filter { case (n, _) => subsetEnv.forall(_.contains(n)) }
-        .sortBy(_._1).foreach { case (name, fn) =>
+      selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try graft.ext.Memo.withConsumer(name) {
           fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name warm pass FAILED: ${e.getClass.getSimpleName}: " +
+            s"${String.valueOf(e.getMessage).take(200)}")
+        }
       }
       // warm frames are sf0.001-keyed and have no timed consumer: free
       // their blocks now rather than carrying them through the whole run
@@ -149,27 +96,6 @@ object Bench {
     val reps = math.max(
       1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt).getOrElse(2))
-    // Optional subset for targeted probes (comma-separated names); the
-    // driver leaves it unset → full surface. Unknown names fail FAST — a
-    // typo silently matching nothing would emit a plausible-looking
-    // all-zero benchmark line that could be recorded as a real datapoint.
-    val subset = subsetEnv
-    subset.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] unknown query name(s) in SPARK_GRAFT_QUERIES: ${unknown.mkString(", ")}")
-        // stop the session first: exiting with a live SparkSession leaves
-        // the Derby metastore lock to die with the JVM instead of a clean
-        // shutdown
-        spark.stop()
-        sys.exit(2)
-      }
-    }
-    val selected = subset match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case scala.None  => SparkEntry.queries
-    }
     val bytesListener = new BytesListener
     spark.sparkContext.addSparkListener(bytesListener)
     // Release schedule: after the LAST selected consumer of a memoized

@@ -3,7 +3,6 @@ package graft
 import graft.model._
 import graft.pipeline.LogsToMetrics
 import graft.sinks.{ConsoleSink, MetricsSink}
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry — the reference's `python -m beametrics.main` analog
   * (/root/reference/beametrics/main.py:276-326) for the batch path:
@@ -65,13 +64,7 @@ object Main {
     val routes = resolveRoutes(opts)
     require(routes.nonEmpty, "config defines no metrics")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     try {
       val ev = Tables.events(spark, eventsDir)
       val points = LogsToMetrics(routes.map(_.definition), LogsToMetrics.Typed(ev.schema))(ev)

@@ -1,12 +1,7 @@
 package graft
 
 import graft.ext.Scale
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 /** Skew probe: the declared ×10 record for explicit salting
   * ([[graft.ext.Scale.saltedJoin]]) against the plain shuffle join on a
@@ -29,54 +24,11 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object SkewBench {
 
-  private final class BytesListener extends SparkListener {
-    final class Counters { val shuffle = new AtomicLong; val spill = new AtomicLong }
-    private val byGroup = new ConcurrentHashMap[String, Counters]()
-    private val stageToGroup = new ConcurrentHashMap[Int, String]()
-    private val events = new AtomicLong
-
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      g.foreach(grp => js.stageIds.foreach(sid => stageToGroup.put(sid, grp)))
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val grp = stageToGroup.get(te.stageId)
-      if (grp != null && te.taskMetrics != null) {
-        val c = byGroup.computeIfAbsent(grp, _ => new Counters)
-        c.shuffle.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        c.spill.addAndGet(te.taskMetrics.diskBytesSpilled)
-      }
-      events.incrementAndGet()
-    }
-    def totals(group: String): (Long, Long) = {
-      val c = byGroup.get(group)
-      if (c == null) (0L, 0L) else (c.shuffle.get, c.spill.get)
-    }
-    def settle(maxMs: Long = 3000): Unit = {
-      var prev = events.get
-      var waited = 0L
-      while (waited < maxMs) {
-        Thread.sleep(100); waited += 100
-        val cur = events.get
-        if (cur == prev) return
-        prev = cur
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_SKEW_FACTOR", "10").toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // the 100 TB analog of the dim does not broadcast; forcing the shuffle
     // join is the point of the probe
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -234,7 +234,7 @@ object SparkEntry {
       val raw = ev(s, dir).select(
         col("ts"),
         encode(to_json(struct(col("event_type"), col("user_id"))), "UTF-8").as("raw"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
       val parsed = Ingest.parseSchemaless(raw, "raw")
       val defs = Seq(
         MetricDefinition(

@@ -1,49 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Split-size the single-file driver fixtures to the core count: the
-      // defaults (128 MB partitions, 4 MB open cost) hand a one-file
-      // 10 MB-compressed events table to 3 of 32 cores — measured 46×
-      // instead of ~10× on the JSON-parse-bound q_label_missing at ×10.
-      // This is the documented sizing knob (partitions track data ÷
-      // executors); a real cluster sizes it to ITS core count the same way.
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      // ObjectHashAggregate (TypedImperativeAggregate: graft_topk_edges,
-      // graft_topk, KMV/CMS sketches) falls back to SORT-based aggregation
-      // after 128 distinct keys per partition BY DEFAULT — at x100 the
-      // kNN top-k agg sorted its whole 57M-row candidate stream (7.4 GB
-      // spill, 3.4x the stage wall). The states are O(k) each, so a
-      // 1M-key hash map is a few MB: keep the agg hash-based.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-      // Memo/intermediate localCheckpoint blocks are ADVISORY caches: the
-      // unified-memory default protects HALF the heap for storage, and the
-      // r14 whole-surface x100 run measured later queries' sorts spilling
-      // 1-12 GB while early families' (or their OWN upstream's) blocks sat
-      // in the protected region. 0.2 lets execution evict cached blocks
-      // (MEMORY_AND_DISK - they re-read from disk, once) instead of
-      // spilling sort runs; plans and results are unaffected.
-      .config("spark.memory.storageFraction", "0.2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // builder-side iteration aid: SPARK_GRAFT_ONLY=q_a,q_b restricts the dump
-    // (unset for the driver → full surface)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val selected = Bench.selectedQueries(spark, "verify")
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -63,7 +28,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // warehouse GC: every result is materialized above, so the bucketed

@@ -1095,7 +1095,7 @@ object Dedup {
     // kernel out; block keys are low-skew by the blocking contract (a block
     // is pair-bounded or the query is quadratic anyway). Join row set is
     // partitioning-independent — results identical.
-    val width = recs.sparkSession.sparkContext.defaultParallelism
+    val width = recs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val a = recs.select(
         (blockCols.map(col) :+ col(idCol).as("a")) :+ col(nameCol).as("na"): _*)
       .repartition(width, blockCols.map(col): _*)

@@ -61,7 +61,7 @@ object Graph {
     // collapse into the per-pair loop.
     val stream = unit
       .select(col("id").as("b"), col("uv").as("bv"))
-      .repartition(vecs.sparkSession.sparkContext.defaultParallelism)
+      .repartition(vecs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     val half = broadcast(unit.select(col("id").as("a"), col("uv").as("av")))
       .join(stream, col("a") < col("b"))
       .select(col("a"), col("b"), Similarity.dot(col("av"), col("bv")).as("cos"))

@@ -158,8 +158,9 @@ object MetricsSink {
     * would fall behind while earlier ones already exported, and a retried
     * batch would duplicate to them — divergent histories). In default
     * (non-strict) mode a target's failure is logged and the batch
-    * succeeds; in strict mode the first failure is rethrown AFTER all
-    * targets were attempted, with later failures attached as suppressed.
+    * succeeds, still consumed in full; in strict mode the first failure is
+    * rethrown AFTER all targets were attempted, with later failures
+    * attached as suppressed.
     */
   def multiRouter(targets: Seq[Target], strict: Boolean = false): (DataFrame, Long) => Unit =
     (batch, _) => {
@@ -178,6 +179,11 @@ object MetricsSink {
           failures.tail.foreach(failures.head.addSuppressed)
           throw failures.head
         }
+        // a target that failed on the driver (before any job ran) may have
+        // left the batch unread, and an unconsumed batch commits no state
+        // (see [[idempotent]]): one no-op pass, from the cache when another
+        // target already filled it
+        if (failures.nonEmpty) cached.foreach((_: Row) => ())
       } finally cached.unpersist()
     }
 

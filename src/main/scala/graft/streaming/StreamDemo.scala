@@ -1,10 +1,10 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.ingest.Ingest
 import graft.model._
 import graft.pipeline.LogsToMetrics
 import graft.sinks.{ConsoleSink, MetricsSink}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end streaming demo: rate source → JSON log bytes →
@@ -18,13 +18,7 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSecs = args.headOption.map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // rate source → synthetic log messages: every 3rd message an ERROR
     // carrying a bytes payload, the rest INFO.

@@ -225,6 +225,34 @@ class StreamingMetricsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("multiRouter: a target failing on the driver still consumes the batch (non-strict)") {
+    import graft.sinks.{ConsoleSink, MetricsSink}
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
+    val parsed = Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw")
+    val Seq(out) = StreamingMetrics.attach(parsed, defs, LogsToMetrics.Schemaless("msg"))
+    // the sink factory closes over a non-serializable value, so the export
+    // job fails at task serialization on the driver, before any task runs:
+    // nothing downstream of the router reads the batch
+    val notSerializable = new Object
+    val unserializable = MetricsSink.Target("bad/", { _ =>
+      notSerializable.hashCode; new ConsoleSink
+    })
+    val q = out.writeStream
+      .outputMode("append")
+      .foreachBatch(MetricsSink.multiRouter(Seq(unserializable)))
+      .start()
+    try {
+      mem.addData((at(65), msg("ERROR", 100).getBytes("UTF-8")))
+      q.processAllAvailable()
+      mem.addData((at(200), msg("ERROR", 7).getBytes("UTF-8")))
+      q.processAllAvailable()
+      // the failed export is logged, and the stateful aggregation still
+      // committed each batch, so the query carries on
+      assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
+    } finally q.stop()
+  }
+
   test("malformed and non-UTF8-decodable messages are dropped") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
